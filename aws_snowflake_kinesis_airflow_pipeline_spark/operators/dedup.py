@@ -30,39 +30,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import adaptive_shingles, tokens, word_shingles
-from .spread import exchange_partitions as _exchange_partitions
 from .spread import scaled_repartition as _scaled_repartition
 from .spread import spread as _spread
-
-
-def _pin_or_scale(frame: DataFrame, *keys: str, source: DataFrame) -> DataFrame:
-    """Pin an expensive kernel's output that feeds a keyed aggregation.
-
-    At bench SFs (the exchange guard says the session default suffices):
-    ``localCheckpoint`` — materializes the kernel once so no re-plan can
-    replay it, the round-5 discipline, measured free at sf10. Lazy
-    (round-12, guide §2.6): the blocks still build exactly once — a lazy
-    local checkpoint is one RDD, computed and persisted by the first job
-    that touches it, and every later consumer (or re-plan) reads the
-    blocks — but the build folds into the first downstream action instead
-    of running as a standalone driver-waited job, so independent stages
-    overlap and per-job scheduling latency is paid once, not per pin.
-
-    When spread.exchange_partitions fires (input >> bench SF): a scaled
-    ``repartition`` on the aggregation keys INSTEAD of the checkpoint.
-    The exchange's shuffle files are the same pin (map output is written
-    once; downstream re-plans re-read files, never recompute), while the
-    checkpoint is actively harmful at this scale in two ways it was
-    measured to be: its blocks build at the SCAN's partition count (32
-    corpus-sized block builds in flight = the round-9 16 g OOM), and
-    Spark's LogicalRDD drops outputPartitioning (pinned in test_spread),
-    so a checkpoint above the exchange would force the groupBy to
-    re-shuffle the whole corpus a second time.
-    """
-    n = _exchange_partitions(source)
-    if n is None:
-        return frame.localCheckpoint(eager=False)
-    return frame.repartition(n, *keys)
 
 
 # --------------------------------------------------------------------------
@@ -1018,19 +987,15 @@ def minhash_lsh_pairs(
     sig = minhash_signatures(
         df, id_col, text_col, num_hashes, k, per_doc=per_doc
     )
-    # localCheckpoint the narrow (id, band_id, band_hash) triple: with
-    # grouped emission it has a single consumer, so this is a pin, not a
-    # dedup of compute — it keeps the signature kernel (the operator's
-    # dominant compute) from ever re-running under a plan change or AQE
-    # re-plan, and A/B at sf10 measured the write+read of the 8M-row
-    # triple as free (within host noise of streaming it). Same
-    # discipline as embedding_near_dup_pairs' bucket triple.
-    # _pin_or_scale: checkpoint at bench SFs; at 1000x the bench SF the
-    # scaled banding exchange replaces it (its shuffle files are the same
-    # pin, with blocks and the final aggregation both sized to the data —
-    # see the helper's docstring for why checkpointing at that scale was
-    # itself the OOM).
-    buckets = _pin_or_scale(
+    # No checkpoint: the (id, band_id, band_hash) triple has a single
+    # consumer, the band groupBy below, and that aggregation's exchange
+    # is the pin — its map output is written once, so a re-plan re-reads
+    # shuffle files and never replays the signature kernel. The scaled
+    # repartition (a no-op until the input outgrows the session's
+    # partition count) sizes that one exchange to the data; a corpus-
+    # sized localCheckpoint here was the round-9 OOM, and its LogicalRDD
+    # drops outputPartitioning, so the groupBy would shuffle twice.
+    buckets = _scaled_repartition(
         band_buckets(sig, id_col, num_hashes, bands),
         "band_id",
         "band_hash",
@@ -1190,182 +1155,28 @@ def _sig_chunk(words: list[Column], offset: int, width: int) -> Column:
     return low.bitwiseOR(F.shiftleft(high, lo_bits)).bitwiseAND(mask)
 
 
-def _simhash_hamming(e1, e2, sig_cols: list[str]) -> Column:
-    """Exact Hamming distance between two signature tuples given column
-    accessors ``e1``/``e2`` mapping a signature column name to a Column."""
-    h = F.bit_count(e1(sig_cols[0]).bitwiseXOR(e2(sig_cols[0])))
-    for c in sig_cols[1:]:
-        h = h + F.bit_count(e1(c).bitwiseXOR(e2(c)))
-    return h
-
-
-def _simhash_pairs_combo(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_hamming: int,
-    bits: int,
-    sig_cols: list[str],
-) -> DataFrame:
-    """Multi-block pigeonhole candidate generation (the Manku/Jain/Sarma
-    WWW'07 simhash-dedup table discipline): split the signature into
-    ``m = max_hamming + 2`` blocks and key each document under every
-    2-block combination — a pair differing in <= max_hamming bits has
-    errors in <= max_hamming blocks, so SOME pair of blocks is clean on
-    both sides and they collide on that combination's key. Compared to
-    the single-chunk pigeonhole (``max_hamming + 1`` chunks, one clean
-    chunk guaranteed), the effective key width DOUBLES (two blocks ≈
-    2·bits/m bits), so spurious collisions fall from ``n²/2^(bits/(h+1))``
-    to ``C(m,2)·n²/2^(2·bits/m)`` — at 128 bits / h=6 that is 18-bit keys
-    (5 M docs: ~3e8 spurious emissions) vs 32-bit keys (~8e4) for 4x the
-    exchange ROWS. The trade only pays once the quadratic emission term
-    dominates (see the strategy-selection note in
-    :func:`simhash_near_dup_pairs` — measured crossover ~5e8 docs; below
-    it the chunk form's spurious pairs are row-local emissions verified
-    before any exchange, and cost less than the extra rows).
-
-    Narrow-exchange discipline (the linedup fingerprint form): the combo
-    exchange ships (id, key) — the key is one xxhash64 of (combo_id,
-    block_i, block_j); a hash collision can only merge buckets, which
-    only ADDS candidates that exact verification removes, never drops a
-    true collision — and the signature words are fetched by id join-back
-    at CANDIDATE volume for verification, instead of riding every
-    bucket-table row. The id-keyed scaled exchange on the signature table
-    is the pin shared by the combo explode and both verify joins (the
-    tf_idf_vectors term-exchange precedent, search.py)."""
-    import itertools
-
-    m = max_hamming + 2
-    if bits // m < 8:
-        raise ValueError(
-            f"combo strategy needs blocks >= 8 bits; bits={bits} over "
-            f"{m} blocks gives {bits // m} — raise bits or lower max_hamming"
-        )
-    base, extra = divmod(bits, m)
-    widths = [base + (1 if i < extra else 0) for i in range(m)]
-    offsets = [sum(widths[:i]) for i in range(m)]
-    words = [F.col(c) for c in sig_cols]
-
-    sig0 = simhash_signatures(df, id_col, text_col, bits=bits)
-    # Pin: the signature aggregation (explode + one conditional sum per
-    # bit over every token — the operator's dominant compute) feeds the
-    # combo explode AND both candidate-volume verify joins; the id-keyed
-    # exchange (or bench-SF checkpoint) makes all three read one
-    # materialization.
-    sig = _pin_or_scale(sig0, id_col, source=df)
-
-    keys = sig.select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.xxhash64(
-                        F.lit(ci),
-                        _sig_chunk(words, offsets[i], widths[i]),
-                        _sig_chunk(words, offsets[j], widths[j]),
-                    )
-                    for ci, (i, j) in enumerate(
-                        itertools.combinations(range(m), 2)
-                    )
-                ]
-            )
-        ).alias("key_val"),
-    )
-    # The combo table is the one corpus-volume exchange (C(m,2) rows/doc
-    # x 16 B) — scaled like every corpus-volume exchange. No checkpoint:
-    # it is a cheap projection of the pinned signatures.
-    keys = _scaled_repartition(keys, "key_val", source=df)
-    postings = (
-        keys.groupBy("key_val")
-        .agg(F.sort_array(F.collect_list(F.col(id_col))).alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
-    # id1 != id2: a doc appears once per combo under DIFFERENT keys, but
-    # an (astronomically unlikely) xxhash64 collision between two of its
-    # own combo keys would put it twice in one bucket — a self-pair the
-    # exact verify could not remove (hamming 0).
-    cand = (
-        _posting_pairs(postings)
-        .filter(F.col("id1") != F.col("id2"))
-        .distinct()
-    )
-
-    s1 = sig.select(
-        F.col(id_col).alias("id1"),
-        *[F.col(c).alias(f"{c}_1") for c in sig_cols],
-    )
-    s2 = sig.select(
-        F.col(id_col).alias("id2"),
-        *[F.col(c).alias(f"{c}_2") for c in sig_cols],
-    )
-    hamming = _simhash_hamming(
-        lambda c: F.col(f"{c}_1"), lambda c: F.col(f"{c}_2"), sig_cols
-    )
-    # SHUFFLE_HASH: candidate volume joined against the corpus-volume
-    # signature table — a statically mis-estimated broadcast of either
-    # side cannot be demoted by AQE (the incremental._verify_cross_pairs
-    # precedent).
-    return (
-        cand.join(s1.hint("shuffle_hash"), "id1")
-        .join(s2.hint("shuffle_hash"), "id2")
-        .select("id1", "id2", hamming.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
 def simhash_near_dup_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
     max_hamming: int = 3,
     bits: int = 64,
-    strategy: str | None = None,
 ) -> DataFrame:
     """Pairs with SimHash Hamming distance <= max_hamming.
 
-    Pigeonhole bucketing, two strategies with the IDENTICAL exact pair
-    set (verification is exact bit_count(xor); only candidate generation
-    differs):
+    Pigeonhole bucketing over ``max_hamming + 1`` chunks: a pair within
+    the Hamming budget must agree exactly on >= 1 chunk (a fixed chunk
+    count would silently miss pairs once max_hamming >= n_chunks).
+    Verification = bit_count(xor) per word — exact, no false positives.
 
-    * ``strategy="combo"`` (the scale path): multi-block keys —
-      ``max_hamming + 2`` blocks, an equality join per 2-block
-      combination, signatures fetched at candidate volume
-      (:func:`_simhash_pairs_combo`). Spurious candidates scale as
-      ``C(m,2)·n²/2^(2·bits/m)``.
-    * ``strategy="chunk"``: ``max_hamming + 1`` chunks — a pair within
-      the Hamming budget must agree exactly on >= 1 chunk. Fewer rows
-      per doc (m+1 vs C(m+2,2)) but SINGLE-block keys: spurious
-      candidates ~``n²/2^(bits/(h+1))`` make it the cheaper form only
-      while the corpus is far from the key-width cliff.
-    * default (``None``): chunk — the measured winner through the 50 M
-      tier (round-12 same-sitting A/B at 5 M: chunk 103.2 s vs combo
-      185.1 s; BASELINE.md). The md5 + per-bit signature aggregation
-      dominates both forms there, and combo's C(m,2) rows/doc exchange
-      costs more than the chunk form's spurious EMISSIONS, which are
-      row-local and verified before any exchange. The crossover is where
-      ``n²·(h+1)/2^(bits/(h+1))`` emissions outgrow ``~C(m,2)·n`` extra
-      exchange rows — ~5e8 docs at 128 bits / h=6 — so pass
-      ``strategy="combo"`` explicitly for corpora beyond ~1e8 documents
-      (at 100 TB the 18-bit chunk buckets hold ~4e5 occupants each and
-      the quadratic emission is infeasible; the combo form is the only
-      viable shape there).
-
-    (A fixed chunk count would silently miss pairs once max_hamming >=
-    n_chunks.) Verification = bit_count(xor) per word — exact, no false
-    positives.
-
-    ``bits`` remains a scale knob at either strategy: doubling the
-    signature widens every key.
+    Spurious candidates grow as ~``n²/2^(bits/(h+1))``, but they are
+    row-local emissions verified before any exchange. Multi-block
+    (2-of-``h+2``) keys trade them for ``C(h+2,2)`` exchange rows per
+    doc, and measured slower at 5 M docs (185.1 s vs 103.2 s, round-12,
+    BASELINE.md); the estimated crossover is ~5e8 docs at 128 bits /
+    h=6. ``bits`` is the scale knob: doubling the signature widens every
+    key.
     """
-    if strategy is None:
-        strategy = "chunk"
-    if strategy == "combo":
-        sig_cols = ["simhash"] + (["simhash_hi"] if bits == 128 else [])
-        return _simhash_pairs_combo(
-            df, id_col, text_col, max_hamming, bits, sig_cols
-        )
-    if strategy != "chunk":
-        raise ValueError(f"unknown simhash strategy: {strategy!r}")
     n_chunks = max_hamming + 1
     base, extra = divmod(bits, n_chunks)
     widths = [base + (1 if i < extra else 0) for i in range(n_chunks)]
@@ -1374,10 +1185,6 @@ def simhash_near_dup_pairs(
     sig_cols = ["simhash"] + (["simhash_hi"] if bits == 128 else [])
     sig = simhash_signatures(df, id_col, text_col, bits=bits)
     words = [F.col(c) for c in sig_cols]
-    # Pinned below (checkpoint or scaled exchange): the full signature
-    # aggregation (explode + one conditional sum per bit over every token
-    # — the operator's dominant compute) must never be replayed by a
-    # downstream re-plan.
     chunks = sig.select(
         id_col,
         *sig_cols,
@@ -1397,11 +1204,11 @@ def simhash_near_dup_pairs(
     ).select(
         id_col, *sig_cols, "ch.chunk_id", "ch.chunk_val"
     )
-    # _pin_or_scale: checkpoint at bench SFs; the scaled chunk exchange
-    # replaces it at corpus scale (docs x n_chunks signature-hauling rows
-    # checkpointed at the scan's partition count is the OOM — see
-    # minhash_lsh_pairs and the helper's docstring).
-    chunks = _pin_or_scale(chunks, "chunk_id", "chunk_val", source=df)
+    # The chunk groupBy below is the table's one consumer, so its exchange
+    # is the pin that keeps the signature aggregation (the operator's
+    # dominant compute) from replaying; scaled like the band buckets in
+    # minhash_lsh_pairs.
+    chunks = _scaled_repartition(chunks, "chunk_id", "chunk_val", source=df)
 
     # Grouped pair emission (same trick as the banding candidates and
     # c3's postings): ONE exchange of the chunk table into per-

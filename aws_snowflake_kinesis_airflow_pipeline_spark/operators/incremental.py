@@ -140,11 +140,7 @@ def write_minhash_index(
         )
 
     if mode == "overwrite":
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            for fut in [pool.submit(_write_sets), pool.submit(_write_buckets)]:
-                fut.result()
+        _run_overlapped(df.sparkSession, _write_sets, _write_buckets)
     else:
         _write_sets()
         _write_buckets()
@@ -506,11 +502,14 @@ def write_embedding_index(
         # is a rebuild. Appends stay sequential — interleaved appends
         # would let a crash publish bucket rows with no matching vector
         # rows in a LIVE store, which the sequential order bounds.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            for fut in [pool.submit(_write_buckets), pool.submit(_write_vectors)]:
-                fut.result()
+        #
+        # The meta dir is cleared first: a store written by an older
+        # layout can hold a part-*.json that spark.read.json would return
+        # instead of the new meta.json, and a rebuild that crashes before
+        # its meta write must leave no meta for the new buckets at all.
+        fs, meta_dir, _ = _fs_for(spark, f"{path}/meta")
+        fs.delete(meta_dir, True)
+        _run_overlapped(spark, _write_buckets, _write_vectors)
     else:
         _write_buckets()
         _write_vectors()
@@ -547,17 +546,44 @@ def append_to_embedding_index(
     )
 
 
+def _run_overlapped(spark: SparkSession, *writes) -> None:
+    """Run independent store writes concurrently, one helper thread each.
+    Every thread inherits the caller's local properties and job tags, so
+    the writes' jobs keep the calling query's job group, description and
+    tags (and are cancelled with it)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(w)) for w in writes
+        ]
+        for fut in futures:
+            fut.result()
+
+
 def _write_json_file(spark: SparkSession, path: str, payload: dict) -> None:
     """Write one JSON object as a single file via the Hadoop FS API (no
-    Spark job; works on any FS the session can reach). Overwrites."""
+    Spark job; works on any FS the session can reach). The bytes go to a
+    hidden temp name in the same directory (Spark's file listing skips
+    dot-files) and are renamed into place, so a reader never sees a
+    partial file. ``path`` must not exist yet."""
     import json as _json
+    import uuid
 
-    fs, hpath, _ = _fs_for(spark, path)
-    out = fs.create(hpath, True)
+    fs, hpath, jvm = _fs_for(spark, path)
+    tmp = jvm.org.apache.hadoop.fs.Path(
+        hpath.getParent(), f".{hpath.getName()}.{uuid.uuid4().hex}.tmp"
+    )
+    out = fs.create(tmp, False)
     try:
         out.write(bytearray(_json.dumps(payload).encode("utf-8")))
     finally:
         out.close()
+    if not fs.rename(tmp, hpath):
+        fs.delete(tmp, False)
+        raise IOError(f"cannot move {tmp} into place at {path}")
 
 
 def _read_embedding_meta(spark: SparkSession, path: str) -> dict:

@@ -1,5 +1,6 @@
-"""Scan-parallelism guard: repartition small scans up to the core count
-before CPU-heavy per-row work, and do nothing at cluster scale.
+"""Scan-parallelism and exchange-sizing guards: repartition small scans
+up to the core count before CPU-heavy per-row work, and size corpus-volume
+exchanges to the input's bytes.
 
 A small parquet file is one row group = one scan task, so heavy per-row
 expression work (shingling, token explode, regex feature packs, signature
@@ -8,6 +9,14 @@ hashing) serializes on a single core while the rest idle — measured
 text-feature pack. At 100 TB the input arrives in thousands of file
 splits, the guard is false, and no extra text-carrying shuffle is ever
 added.
+
+One execution form per operator: :func:`exchange_partitions` sizes an
+exchange and never selects a plan shape. No caller branches on its result
+to choose a different plan at bench size (say, a ``localCheckpoint`` pin
+where the at-scale form has a scaled exchange), because the bench and the
+oracle would then check a form that does not run at scale. The form that
+is safe at scale is the only form; at bench size
+:func:`scaled_repartition` is a no-op and the plan is unchanged.
 """
 
 from __future__ import annotations
@@ -70,9 +79,7 @@ def spread(df: DataFrame, *cols: str) -> DataFrame:
 _EXCHANGE_INPUT_BUDGET = 5 * 2**19  # 2.5 MiB
 
 
-def exchange_partitions(
-    source: DataFrame, bytes_per_partition: int | None = None
-) -> int | None:
+def exchange_partitions(source: DataFrame) -> int | None:
     """Partition count for a corpus-volume exchange, derived from the
     source scan's file bytes — or None when the session default already
     suffices.
@@ -87,10 +94,6 @@ def exchange_partitions(
     operator-level default (thousands of shuffle partitions + AQE
     coalescing) is the right mechanism, and this guard must not fight it.
     """
-    if bytes_per_partition is None:
-        # Resolved at call time so tests can monkeypatch the module
-        # constant to force the guard at tiny fixtures.
-        bytes_per_partition = _EXCHANGE_INPUT_BUDGET
     spark = source.sparkSession
     try:
         session_parts = int(
@@ -109,15 +112,14 @@ def exchange_partitions(
     sizes = [_local_file_size(uri) for uri in files]
     if any(s is None for s in sizes):
         return None
-    n = math.ceil(sum(sizes) / max(bytes_per_partition, 1))
+    # The budget is read at call time so tests can monkeypatch the module
+    # constant to force the guard at tiny fixtures.
+    n = math.ceil(sum(sizes) / max(_EXCHANGE_INPUT_BUDGET, 1))
     return n if n > session_parts else None
 
 
 def scaled_repartition(
-    df: DataFrame,
-    *cols: str,
-    source: DataFrame | None = None,
-    bytes_per_partition: int | None = None,
+    df: DataFrame, *cols: str, source: DataFrame | None = None
 ) -> DataFrame:
     """Repartition ``df`` on its upcoming exchange keys with a partition
     count scaled to ``source``'s input bytes (default: ``df`` itself —
@@ -133,9 +135,7 @@ def scaled_repartition(
     collect_list/pair-emission exchanges this guards (partials don't
     reduce list bytes, and grouped-emission pairs are ~1.1x duplicated at
     most)."""
-    n = exchange_partitions(
-        source if source is not None else df, bytes_per_partition
-    )
+    n = exchange_partitions(source if source is not None else df)
     if n is None:
         return df
     return df.repartition(n, *cols)

@@ -2402,19 +2402,12 @@ def c26_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.linedup import drop_duplicate_lines
     from ..operators.spandup import remove_duplicate_spans
 
-    from ..operators.spread import exchange_partitions
-
     docs = _docs(spark, sf_dir).select("doc_id", "text")
-    # Shared pinned bases (round-13, guide §2.4): each branch's operator
-    # references its docs∪planted base 2-3 times (fingerprint pass, hot
-    # occurrence pass, text rebuild join-back), so the un-pinned pack
-    # re-scans parquet 12 times and re-spreads the text per appearance —
-    # 42 Exchanges. Pinning each branch's base once at bench SFs cut the
-    # plan to 18 Exchanges / 0 re-scans and exec 2.0 -> 1.4 s (same
-    # sitting, identical rows). At real scale pinning corpus text is the
-    # round-9 OOM; the raw form (re-scan per pass, pruned at the reader)
-    # is correct there, so the guard keeps it.
-    _pin_base = exchange_partitions(docs) is None
+    # Each branch's operator references its docs∪planted base 2-3 times
+    # (fingerprint pass, hot occurrence pass, text rebuild join-back) and
+    # re-scans it per reference, pruned at the reader. Pinning the bases
+    # cut the plan from 42 to 18 Exchanges at sf0.1, but pinning corpus
+    # text is the round-9 OOM at scale, so the raw form is the only one.
     line_planted = spark.createDataFrame(
         _LINEDUP_PLANTED, "doc_id long, text string"
     ).repartition(1)  # tiny local frame: see the c15 needle note
@@ -2425,8 +2418,6 @@ def c26_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Byte-identical output, so the byte-for-byte oracle is unchanged;
     # the text form stays property-pinned row-identical in the fuzz suite.
     line_base = docs.unionByName(line_planted)
-    if _pin_base:
-        line_base = line_base.localCheckpoint(eager=False)
     line = drop_duplicate_lines(
         line_base,
         "doc_id",
@@ -2446,8 +2437,6 @@ def c26_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         _SPANDUP_PLANTED, "doc_id long, text string"
     ).repartition(1)  # tiny local frame: see the c15 needle note
     span_base = docs.unionByName(span_planted)
-    if _pin_base:
-        span_base = span_base.localCheckpoint(eager=False)
     span = remove_duplicate_spans(
         span_base,
         "doc_id",

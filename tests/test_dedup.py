@@ -340,39 +340,21 @@ def test_simhash_128_exact_recall_and_low_word_identity(spark):
             assert h == ham(s128[i], s128[j])
 
 
-def test_simhash_strategies_emit_identical_pairs(spark):
-    """combo and chunk candidate generation must produce the IDENTICAL
-    exact pair set (verification is exact; only the pigeonhole differs) —
-    on a richer corpus than make_docs so multi-block agreement patterns
-    actually vary. Also pins the invalid-combo guard."""
-    import pytest as _pytest
-
+def test_simhash_chunk_finds_planted_exact_dups(spark):
+    """Planted exact duplicates verify at Hamming 0 at both signature
+    widths — on a richer corpus than make_docs so chunk agreement
+    patterns actually vary."""
     rows = [(i, f"w{i % 7} common tokens here x{i} y{i % 3}") for i in range(40)]
     rows += [(100, rows[0][1]), (101, rows[1][1])]  # exact dups
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     for mh, bits in ((3, 64), (6, 128)):
-        combo = {
-            (r["id1"], r["id2"], r["hamming"])
-            for r in dedup.simhash_near_dup_pairs(
-                docs, "doc_id", "text", mh, bits, strategy="combo"
-            ).collect()
-        }
         chunk = {
             (r["id1"], r["id2"], r["hamming"])
             for r in dedup.simhash_near_dup_pairs(
-                docs, "doc_id", "text", mh, bits, strategy="chunk"
+                docs, "doc_id", "text", mh, bits
             ).collect()
         }
-        assert combo == chunk, (mh, bits)
-        assert (0, 100, 0) in combo and (1, 101, 0) in combo
-    with _pytest.raises(ValueError, match="blocks >= 8 bits"):
-        dedup.simhash_near_dup_pairs(
-            docs, "doc_id", "text", 20, 64, strategy="combo"
-        )
-    with _pytest.raises(ValueError, match="unknown simhash strategy"):
-        dedup.simhash_near_dup_pairs(
-            docs, "doc_id", "text", strategy="banded"
-        )
+        assert (0, 100, 0) in chunk and (1, 101, 0) in chunk, (mh, bits)
 
 
 def test_embedding_near_dups_planted(spark):

@@ -124,33 +124,36 @@ def test_exchange_partitions_default_is_none_at_bench_sf(spark, sf_dir):
     assert "RepartitionByExpression" not in out._jdf.queryExecution().logical().toString()
 
 
-def test_exchange_partitions_scales_with_input_bytes(spark, sf_dir):
+def test_exchange_partitions_scales_with_input_bytes(spark, sf_dir, monkeypatch):
     import math
 
     docs = load_table(spark, sf_dir, "documents")
     total = _input_bytes(docs)
-    n = exchange_partitions(docs, bytes_per_partition=64)
+    monkeypatch.setattr(spread_mod, "_EXCHANGE_INPUT_BUDGET", 64)
+    n = exchange_partitions(docs)
     assert n == math.ceil(total / 64)
     assert n > int(spark.conf.get("spark.sql.shuffle.partitions"))
 
 
-def test_exchange_partitions_none_without_file_lineage(spark):
+def test_exchange_partitions_none_without_file_lineage(spark, monkeypatch):
     """In-memory inputs have no file metadata — trust the session default
     (on a real cluster that is thousands of partitions + AQE coalescing)."""
     df = spark.createDataFrame([(1, "a")], "id long, s string")
-    assert exchange_partitions(df, bytes_per_partition=1) is None
+    monkeypatch.setattr(spread_mod, "_EXCHANGE_INPUT_BUDGET", 1)
+    assert exchange_partitions(df) is None
 
 
-def test_scaled_repartition_satisfies_downstream_groupby(spark, sf_dir):
+def test_scaled_repartition_satisfies_downstream_groupby(spark, sf_dir, monkeypatch):
     """The explicit scaled exchange must SATISFY the downstream groupBy's
     clustering requirement: exactly ONE Exchange in the physical plan
     (hashpartitioning on the group keys at the scaled count), never a
     second exchange stacked on top — otherwise the guard would double
     every corpus-volume shuffle it is meant to protect."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    n = exchange_partitions(docs, bytes_per_partition=64)
+    monkeypatch.setattr(spread_mod, "_EXCHANGE_INPUT_BUDGET", 64)
+    n = exchange_partitions(docs)
     out = (
-        scaled_repartition(docs, "doc_id", bytes_per_partition=64)
+        scaled_repartition(docs, "doc_id")
         .groupBy("doc_id")
         .agg(F.count("*").alias("n"))
     )
@@ -186,8 +189,12 @@ def test_linedup_plan_has_two_scaled_exchanges(spark, sf_dir, monkeypatch):
 def test_scaled_exchanges_preserve_dedup_results(spark, sf_dir, monkeypatch):
     """Forcing the guard ON at a tiny fixture (budget = 64 bytes -> the
     exchanges fire with ~100+ partitions) must not change any dedup-family
-    result — partition count is physical, the row sets are the contract."""
+    result — partition count is physical, the row sets are the contract.
+    The registered queries whose plans once forked on the guard (b10,
+    c26, s1, c4) ride along: their one plan must give identical rows at
+    both budgets."""
     from aws_snowflake_kinesis_airflow_pipeline_spark.operators import dedup, linedup, spandup
+    from aws_snowflake_kinesis_airflow_pipeline_spark.plans.registry import QUERIES
 
     docs = spread(
         load_table(spark, sf_dir, "documents").select("doc_id", "text"),
@@ -202,8 +209,19 @@ def test_scaled_exchanges_preserve_dedup_results(spark, sf_dir, monkeypatch):
         sx = dedup.exact_dedup(docs, ["text"], "doc_id").collect()
         ln = linedup.drop_duplicate_lines(docs, "doc_id", "text").collect()
         sp = spandup.duplicate_spans(docs, window=8, max_df=16).collect()
+        registered = [
+            QUERIES[name].fn(spark, sf_dir).collect()
+            for name in (
+                "b10_json_array_pack",
+                "c26_line_dedup",
+                "s1_window_counts",
+                "c4_simhash_near_dups",
+            )
+        ]
         key = lambda r: tuple(str(v) for v in r)
-        return [sorted(rows, key=key) for rows in (mh, jc, sx, ln, sp)]
+        return [
+            sorted(rows, key=key) for rows in (mh, jc, sx, ln, sp, *registered)
+        ]
 
     base = snapshot()
     monkeypatch.setattr(spread_mod, "_EXCHANGE_INPUT_BUDGET", 64)
@@ -212,11 +230,10 @@ def test_scaled_exchanges_preserve_dedup_results(spark, sf_dir, monkeypatch):
 
 
 def test_local_checkpoint_drops_partitioning(spark, sf_dir):
-    """Document the Spark behavior dedup._pin_or_scale is designed
+    """Document the Spark behavior the scaled dedup exchanges are designed
     around: localCheckpoint's LogicalRDD does NOT carry outputPartitioning
-    forward, so an aggregation above a checkpointed exchange re-shuffles.
-    If a Spark upgrade ever makes this assertion fail, _pin_or_scale can
-    be simplified to repartition + checkpoint."""
+    forward, so an aggregation above a checkpointed exchange re-shuffles —
+    a pin stacked on a scaled exchange would shuffle the corpus twice."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     ck = docs.repartition(7, "doc_id").localCheckpoint()
     out = ck.groupBy("doc_id").agg(F.count("*").alias("n"))
@@ -224,23 +241,35 @@ def test_local_checkpoint_drops_partitioning(spark, sf_dir):
     assert "Exchange" in plan
 
 
-def test_pin_or_scale_modes(spark, sf_dir, monkeypatch):
-    """_pin_or_scale: checkpoint at bench SFs (guard off); when the guard
-    fires, a scaled repartition whose downstream groupBy adds NO second
-    exchange — the corpus shuffles exactly once."""
-    from aws_snowflake_kinesis_airflow_pipeline_spark.operators.dedup import _pin_or_scale
+def test_simhash_chunk_exchange_is_the_only_pin(spark, sf_dir, monkeypatch):
+    """The simhash chunk table has no checkpoint in either regime: its one
+    consumer's grouping exchange is the pin. When the guard fires, that
+    exchange is the scaled one on (chunk_id, chunk_val) and the chunk
+    groupBy adds NO second exchange — the chunk table shuffles once."""
+    import re
+
+    from aws_snowflake_kinesis_airflow_pipeline_spark.operators.dedup import (
+        simhash_near_dup_pairs,
+    )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    pinned = _pin_or_scale(docs, "doc_id", source=docs)
-    assert "ExistingRDD" in pinned._jdf.queryExecution().executedPlan().toString()
+
+    def plan():
+        out = simhash_near_dup_pairs(docs, "doc_id", "text", 6, 128)
+        return out._jdf.queryExecution().executedPlan().toString()
+
+    assert "ExistingRDD" not in plan()
 
     monkeypatch.setattr(spread_mod, "_EXCHANGE_INPUT_BUDGET", 64)
     n = exchange_partitions(docs)
-    scaled = _pin_or_scale(docs, "doc_id", source=docs)
-    out = scaled.groupBy("doc_id").agg(F.count("*").alias("n"))
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("+- Exchange") + plan.count(":- Exchange") == 1
-    assert f", {n})" in plan
+    assert n is not None
+    scaled = plan()
+    assert "ExistingRDD" not in scaled
+    chunk_exchanges = re.findall(
+        r"Exchange hashpartitioning\(chunk_id#\d+, chunk_val#\d+L?, (\d+)\)",
+        scaled,
+    )
+    assert chunk_exchanges == [str(n)], scaled[:3000]
 
 
 def test_scaled_exchange_preserves_embedding_pairs(spark, monkeypatch):
@@ -270,17 +299,18 @@ def test_scaled_exchange_preserves_embedding_pairs(spark, monkeypatch):
     assert pairs() == base
 
 
-def test_subset_key_exchange_satisfies_wider_groupby(spark, sf_dir):
+def test_subset_key_exchange_satisfies_wider_groupby(spark, sf_dir, monkeypatch):
     """tfidf_vectors' design fact: a hash exchange on a SUBSET of the
     group keys (term) satisfies a wider groupBy's clustering (id, term) —
     equal (id, term) implies equal term implies same partition. Exactly
     one exchange below the (id, term) aggregation."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    monkeypatch.setattr(spread_mod, "_EXCHANGE_INPUT_BUDGET", 64)
     exploded = docs.select(
         "doc_id", F.explode(F.split(F.lower("text"), "\\s+")).alias("term")
     )
     out = (
-        scaled_repartition(exploded, "term", source=docs, bytes_per_partition=64)
+        scaled_repartition(exploded, "term", source=docs)
         .groupBy("doc_id", "term")
         .agg(F.count("*").alias("tf"))
     )
@@ -321,12 +351,11 @@ def test_scaled_exchanges_preserve_tfidf_and_encoding(spark, sf_dir, monkeypatch
 
 
 def test_tfidf_pin_drops_checkpoint_at_scale(spark, sf_dir, monkeypatch):
-    """The round-11 fix for the 50 M-doc tf-idf OOM: at bench SFs the
-    (doc, term, tf) postings pin is a localCheckpoint; when the exchange
-    guard fires, the checkpoint is DROPPED and the term-keyed scaled
-    exchange's shuffle files are the pin — a corpus-sized checkpoint
-    builds whole postings partitions in block-manager memory (the
-    demonstrated 32 GiB OOM, BASELINE.md round-10). The one scaled
+    """The round-11 fix for the 50 M-doc tf-idf OOM: when the exchange
+    guard fires there is no (doc, term, tf) checkpoint and the term-keyed
+    scaled exchange's shuffle files are the pin — a corpus-sized
+    checkpoint builds whole postings partitions in block-manager memory
+    (the demonstrated 32 GiB OOM, BASELINE.md round-10). The one scaled
     exchange must serve BOTH downstream aggregations (subset-key rule:
     (id, term) and term), so no session-default exchange may appear."""
     from aws_snowflake_kinesis_airflow_pipeline_spark.operators.search import (
@@ -334,13 +363,6 @@ def test_tfidf_pin_drops_checkpoint_at_scale(spark, sf_dir, monkeypatch):
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-
-    # Guard off: checkpoint pin present (ExistingRDD scan in the plan).
-    bench_plan = (
-        tf_idf_vectors(docs, vocab_size=50)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "ExistingRDD" in bench_plan
 
     # Guard on: no checkpoint anywhere, and every hash exchange in the
     # plan is the scaled term-keyed one (possibly printed once per

@@ -240,12 +240,6 @@ def _ops(spark, d):
         "c4": lambda: dedup.simhash_near_dup_pairs(
             docs(), "doc_id", "text", max_hamming=6, bits=128
         ),
-        # The pre-round-12 single-chunk pigeonhole, kept for same-sitting
-        # A/Bs against the combo default above.
-        "c4chunk": lambda: dedup.simhash_near_dup_pairs(
-            docs(), "doc_id", "text", max_hamming=6, bits=128,
-            strategy="chunk",
-        ),
         "c8": lambda: llm_suite.c8_text_features(spark, d),
         "c16": lambda: dedup.near_dup_dedup(docs(), "doc_id", "text", threshold=0.8),
         "c5": lambda: dedup.embedding_near_dup_pairs(
